@@ -1,16 +1,22 @@
 """Text-analysis + deduplication operators over a documents table.
 
-All operators are pure Catalyst expressions (split/transform/aggregate/
-md5/window) — whole-stage-codegen-friendly, no Python on the hot path.
-Each has a matching ANSI-SQL oracle in __spark_entry__.py.
+Operators whose work is a projection or an aggregation are Catalyst
+expressions (split/transform/aggregate/md5/window). Operators whose
+cost is per-token hashing or compression (shingles, MinHash, SimHash,
+DSIR, repetition signals, compression ratio) run as map-only
+``mapInArrow``/``mapInPandas`` kernels in the Python worker: C-speed
+md5, zlib and str.split/join over whole Arrow batches,
+worker-resident hash caches, no row per token. Each operator has a
+matching ANSI-SQL oracle in __spark_entry__.py.
 
 Scale notes:
 * exact_dedup / fingerprint: one hash-shuffle on the group key; at
   10^12 rows group by md5(text) (fixed 32-byte key) rather than raw
   text to keep shuffle rows small.
-* minhash: shingle explode -> 8 per-seed min-aggregations in ONE
-  groupBy pass (map-side partial aggregation does the heavy lifting);
-  band hashes then bucket candidates without any pairwise join.
+* minhash: one map-only Arrow pass computes each document's per-seed
+  md5 minima and its band hashes (``_minhash_bands_arrow``) — no
+  explode, no exchange; band hashes then bucket candidates without any
+  pairwise join.
 * ngram_jaccard: pairwise join restricted to a blocking key (source)
   so the candidate space stays bounded; the general path is
   minhash-band blocking first, exact jaccard only within buckets.
@@ -1002,12 +1008,6 @@ def _doc_shingles_arrow(
     ).mapInArrow(kernel, schema)
 
 
-def shingle_table(documents: DataFrame, k: int = 3) -> DataFrame:
-    return _doc_shingles_arrow(documents, k, with_source=True).select(
-        "doc_id", "source", F.explode("shingles").alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(
     documents: DataFrame, k: int = 3, threshold: float = 0.1,
     max_df: int = 64,
@@ -1097,21 +1097,28 @@ def _minhash_bands_arrow(
     documents: DataFrame, n_seeds: int, n_bands: int, k: int
 ) -> DataFrame:
     """(doc_id, bands array<string>) via one mapInArrow pass — the
-    portable-hash (md5) MinHash signature computed per document in the
-    Python worker instead of explode + 8 Catalyst md5 calls per
-    shingle row + a groupBy shuffle of the hash strings (guide §4.2:
-    map-only, C-speed OpenSSL md5, zero exchanges).
+    md5 MinHash signature computed per document in the Python worker
+    instead of explode + 8 Catalyst md5 calls per shingle row + a
+    groupBy shuffle of the hash strings (guide §4.2: map-only, C-speed
+    OpenSSL md5, zero exchanges).
 
-    Bit-identical to the Catalyst formulation: Python ``str.split(" ")``
-    matches Java ``Pattern.split`` (limit -1) for the literal
-    single-space pattern incl. leading/trailing empties; md5 runs over
+    Bit-identical to the SQL formulation (Spark split/md5/min, as in
+    the oracle): Python ``str.split(" ")`` matches Java
+    ``Pattern.split`` (limit -1) for the literal single-space pattern
+    incl. leading/trailing empties; md5 runs over
     the same UTF-8 bytes; the per-seed min is the same byte-wise
     lexicographic min over lowercase hex strings; duplicate shingles
     cannot change a min, so skipping array_distinct is value-neutral.
     Docs that produce no shingle (null text or < k tokens) emit no row,
-    exactly like the groupBy over an empty explode."""
+    exactly like the groupBy over an empty explode. Raises ValueError
+    unless ``n_bands`` divides ``n_seeds`` (a remainder seed would
+    silently fall out of every band)."""
     import pyarrow as pa
 
+    if n_bands < 1 or n_seeds % n_bands != 0:
+        raise ValueError(
+            f"n_seeds={n_seeds} must split evenly into n_bands={n_bands}"
+        )
     r = n_seeds // n_bands
 
     def kernel(batches):
@@ -1175,44 +1182,23 @@ def _minhash_bands_arrow(
 
 def minhash_bands(
     documents: DataFrame, n_seeds: int = 8, k: int = 3,
-    portable_hash: bool = True,
 ) -> DataFrame:
-    """MinHash signature (lexicographic/numeric min per seed) + 2 LSH
-    band hashes of 4 rows each. Candidate duplicate groups share a band.
-
-    ``portable_hash=True`` (the oracled default) derives hashes from md5
-    hex digests so the exact same values are computable in ANSI SQL.
-    ``portable_hash=False`` is the production path: xxhash64 (JVM
-    intrinsic, no string materialization) — same algorithm, different
-    hash family, ~2x cheaper per token at corpus scale."""
-    if portable_hash:
-        # map-only Arrow kernel (see _minhash_bands_arrow): no explode,
-        # no groupBy shuffle, md5 at C speed — identical values
-        sig = _minhash_bands_arrow(documents, n_seeds, 2, k)
-        return sig.select(
-            "doc_id",
-            F.element_at("bands", 1).alias("band_a"),
-            F.element_at("bands", 2).alias("band_b"),
-        )
-    sh = shingle_table(documents, k)
-    seed_hash = lambda s: F.xxhash64(  # noqa: E731
-        F.lit(f"{s}:"), F.col("shingle")
-    )
-    band_hash = lambda cols: F.xxhash64(*cols)  # noqa: E731
-    cast = lambda c: c.cast("string")  # noqa: E731
-    aggs = [F.min(seed_hash(s)).alias(f"m{s}") for s in range(n_seeds)]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    half = n_seeds // 2
-    band_a = band_hash([F.col(f"m{s}") for s in range(0, half)])
-    band_b = band_hash([F.col(f"m{s}") for s in range(half, n_seeds)])
+    """MinHash signature (lexicographic min per seed) + 2 LSH band
+    hashes of ``n_seeds / 2`` rows each. Candidate duplicate groups
+    share a band. Hashes derive from md5 hex digests, so the exact same
+    values are computable in ANSI SQL (the oracle); the signature is
+    one map-only Arrow pass (see _minhash_bands_arrow)."""
+    sig = _minhash_bands_arrow(documents, n_seeds, 2, k)
     return sig.select(
-        "doc_id", cast(band_a).alias("band_a"), cast(band_b).alias("band_b")
+        "doc_id",
+        F.element_at("bands", 1).alias("band_a"),
+        F.element_at("bands", 2).alias("band_b"),
     )
 
 
 def minhash_band_table(
     documents: DataFrame, n_seeds: int = 8, n_bands: int = 2,
-    k: int = 3, portable_hash: bool = True,
+    k: int = 3,
 ) -> DataFrame:
     """General (bands x rows) MinHash LSH in LONG form: one
     (doc_id, band) row per band — the tunable API behind the fixed
@@ -1222,28 +1208,8 @@ def minhash_band_table(
     P(candidate) = 1-(1-j^r)^b); n_seeds must divide into n_bands.
     At n_bands=2 the band values are bit-identical to
     minhash_bands' band_a/band_b."""
-    if n_seeds % n_bands != 0:
-        raise ValueError("n_bands must divide n_seeds")
-    r = n_seeds // n_bands
-    if portable_hash:
-        # map-only Arrow kernel (see _minhash_bands_arrow): no explode,
-        # no groupBy shuffle, md5 at C speed — identical values
-        sig = _minhash_bands_arrow(documents, n_seeds, n_bands, k)
-        return sig.select("doc_id", F.explode("bands").alias("band"))
-    sh = shingle_table(documents, k)
-    seed_hash = lambda s: F.xxhash64(  # noqa: E731
-        F.lit(f"{s}:"), F.col("shingle")
-    )
-    band_hash = lambda cols: F.xxhash64(*cols)  # noqa: E731
-    cast = lambda c: c.cast("string")  # noqa: E731
-    aggs = [F.min(seed_hash(s)).alias(f"m{s}") for s in range(n_seeds)]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    bands = F.array(*[
-        cast(band_hash([F.col(f"m{s}")
-                        for s in range(b * r, (b + 1) * r)]))
-        for b in range(n_bands)
-    ])
-    return sig.select("doc_id", F.explode(bands).alias("band"))
+    sig = _minhash_bands_arrow(documents, n_seeds, n_bands, k)
+    return sig.select("doc_id", F.explode("bands").alias("band"))
 
 
 def minhash_dedup(
@@ -1413,15 +1379,14 @@ def dsir_weights(
 def minhash_incremental_dedup(
     new_docs: DataFrame, stored_bands: DataFrame,
     n_seeds: int = 8, n_bands: int = 2, k: int = 3,
-    portable_hash: bool = True,
 ) -> DataFrame:
     """Cross-crawl incremental near-dup gate — the MinHash analogue of
     the historical Bloom gate (streaming/stream.py): a NEW crawl batch
     is deduped against an already-signed history WITHOUT recomputing
     history signatures. ``stored_bands`` is the persisted
     minhash_band_table output for the historical corpus ((doc_id, band)
-    long form; must be built with the same n_seeds/n_bands/k/hash
-    family, and doc_ids must be unique across history + new — monotone
+    long form; must be built with the same n_seeds/n_bands/k, and
+    doc_ids must be unique across history + new — monotone
     crawl ids satisfy both).
 
     Decision semantics are EXACTLY batch minhash_dedup over the union
@@ -1441,7 +1406,6 @@ def minhash_incremental_dedup(
     """
     new_bands = minhash_band_table(
         new_docs, n_seeds=n_seeds, n_bands=n_bands, k=k,
-        portable_hash=portable_hash,
     ).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "band",
@@ -2599,6 +2563,9 @@ def boilerplate_lines(
     lines of one host colliding could miscount or misstrip — at 10^12
     lines the per-host birthday bound keeps this ~0, and no false
     NEGATIVES exist (a boiler line always matches itself).
+    ``xxhash64`` skips a NULL host, so all NULL-host documents count as
+    one shared host: a line on >= ``min_docs`` of them is stripped
+    from every one of them.
 
     Returns (doc_id, text_clean, n_lines, n_boiler).
     """

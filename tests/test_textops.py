@@ -126,6 +126,17 @@ def test_minhash_bands_group_dups(docs):
     assert out[1] != out[4]
 
 
+def test_minhash_seeds_must_split_into_bands(docs):
+    """minhash_bands' fixed two bands get the same plan-time check as
+    minhash_band_table: an odd seed count raises instead of the
+    remainder seed silently falling out of every band, and zero bands
+    raise a ValueError, not a ZeroDivisionError."""
+    with pytest.raises(ValueError, match="n_seeds=7"):
+        textops.minhash_bands(docs, n_seeds=7)
+    with pytest.raises(ValueError, match="n_bands=0"):
+        textops.minhash_band_table(docs, n_seeds=8, n_bands=0)
+
+
 def test_simhash_near_dup_hamming(docs):
     out = {r.doc_id: r.simhash for r in textops.simhash64(docs).collect()}
     assert out[1] == out[2]
@@ -395,15 +406,6 @@ def test_repetition_signals(spark):
     assert out[1].top_bigram_frac == pytest.approx(8 / 8)
     assert out[2].dup_token_frac == 0.0 and out[2].top_bigram_cnt == 1
     assert out[3].top_bigram is None and out[3].top_bigram_cnt == 0
-
-
-def test_minhash_production_hash_groups_same(docs):
-    # the xxhash64 production path must group identically to the
-    # oracled md5 path (same algorithm, different hash family)
-    fast = {r.doc_id: (r.band_a, r.band_b)
-            for r in textops.minhash_bands(docs, portable_hash=False).collect()}
-    assert fast[1] == fast[2]  # identical docs
-    assert fast[1] != fast[4]
 
 
 def test_kmv_sketch_accuracy(spark):
@@ -1595,35 +1597,68 @@ def test_semdedup_within_cluster_pruning(embeddings, spark):
     assert 3 <= len(kept) <= 12
 
 
+def _assign_join(em, centroids):
+    """Test-only reference for k-means assignment, in pure Catalyst:
+    each vector meets the k broadcast centroids, the integer squared
+    distance is a Catalyst fold, and the argmin is min(struct(d, j)) —
+    distance first, then j, so ties go to the LOWER cluster id.
+    Returns (vec_id, em, cluster)."""
+    from dce_spark.functions.simsearch import _SQDIST, _centroid_df
+
+    cent = F.broadcast(_centroid_df(em.sparkSession, centroids))
+    scored = em.crossJoin(cent).select(
+        "vec_id", "em",
+        F.struct(
+            F.expr(_SQDIST).alias("d"), F.col("j").alias("j")
+        ).alias("dj"),
+    )
+    return (
+        scored.groupBy("vec_id")
+        .agg(F.min("dj").alias("m"), F.first("em").alias("em"))
+        .select(
+            "vec_id", "em", F.col("m.j").cast("long").alias("cluster")
+        )
+    )
+
+
 def test_kmeans_uncapped_k_and_paths_identical(spark):
     """The k <= 99 argmin-encoding cap is gone: k=64 and k=120 both
-    run, and the broadcast-join struct-min path and the Arrow matmul
-    path produce bit-identical assignments (both are exact int64
-    argmin with ties to the lower cluster id)."""
+    run, and the library's Arrow matmul assignment (kmeans_embeddings)
+    and the broadcast-join struct-min reference above produce
+    identical (vec_id, cluster) sets from the same kmeans_fit
+    centroids. vec_id 1 duplicates vec_id 0, so two initial centroids
+    tie exactly and both sides must send the tie to the lower id."""
     import math
 
-    from dce_spark.functions.simsearch import kmeans_embeddings
+    from dce_spark.functions.simsearch import (
+        _quantize_embeddings, kmeans_embeddings, kmeans_fit,
+    )
 
     rows = []
     for vid in range(150):
-        vec = [math.sin(vid * 13 + d * 5) for d in range(8)]
+        src = 0 if vid == 1 else vid
+        vec = [math.sin(src * 13 + d * 5) for d in range(8)]
         rows.append((vid, vec))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = sorted(
-        (r.vec_id, r.cluster)
-        for r in kmeans_embeddings(emb, k=64, n_iters=2, dim=8).collect()
-    )
-    b = sorted(
-        (r.vec_id, r.cluster)
-        for r in kmeans_embeddings(
-            emb, k=64, n_iters=2, dim=8, assign_via="arrow"
-        ).collect()
-    )
-    assert a == b
-    assert len(a) == 150 and len({c for _, c in a}) > 8
-    big = kmeans_embeddings(emb, k=120, n_iters=1, dim=8).collect()
-    assert len(big) == 150
-    assert max(r.cluster for r in big) >= 100  # beyond the old cap
+    for k, n_iters in ((64, 2), (120, 1)):
+        centroids = kmeans_fit(emb, k=k, n_iters=n_iters, dim=8)
+        ref = {
+            (r.vec_id, r.cluster)
+            for r in _assign_join(
+                _quantize_embeddings(emb), centroids
+            ).collect()
+        }
+        lib = {
+            (r.vec_id, r.cluster)
+            for r in kmeans_embeddings(
+                emb, k=k, n_iters=n_iters, dim=8
+            ).collect()
+        }
+        assert lib == ref, k
+        assert len(lib) == 150 and len({c for _, c in lib}) > 8
+        assert centroids[0] == centroids[1]  # the tie survives the fit
+        assert {c for v, c in lib if v in (0, 1)} == {0}
+    assert max(c for _, c in lib) >= 100  # k=120: beyond the old cap
 
 
 def test_kmeans_k1_single_cluster(embeddings):
@@ -1838,6 +1873,30 @@ def test_split_assign_content_keyed_and_deterministic(spark):
         textops.split_assign(docs, val_permille=600, test_permille=500)
     with pytest.raises(ValueError):
         textops.split_assign(docs, by="bogus")
+
+
+def test_boilerplate_lines_null_host_is_one_shared_host(spark):
+    """Pins current behaviour: xxhash64 skips a NULL host, so lines
+    repeated across NULL-host documents are counted together as if
+    they shared one host, and stripped; the same line on a named host
+    is still counted separately."""
+    rows = [
+        (1, None, "MENU\nbody one"),
+        (2, None, "MENU\nbody two"),
+        (3, None, "MENU\nbody three"),
+        (4, "a", "MENU\nbody four"),
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, source string, text string"
+    )
+    out = {r.doc_id: r for r in textops.boilerplate_lines(
+        docs, min_docs=3).collect()}
+    for d in (1, 2, 3):
+        assert (out[d].n_lines, out[d].n_boiler) == (2, 1), d
+    assert out[1].text_clean == "body one"
+    assert out[3].text_clean == "body three"
+    assert out[4].text_clean == "MENU\nbody four"
+    assert out[4].n_boiler == 0
 
 
 def test_boilerplate_lines_random_property(spark):
