@@ -22,6 +22,11 @@ re-architected for Spark:
 __version__ = "0.1.0"
 
 from dce_spark.core.api import extract_article, extract_content, extract_page
+from dce_spark.spark import worker as _worker
+
+# Every worker-side kernel imports this package when its pickled
+# function loads, so this is the one place the worker hook is set.
+_worker.install()
 
 # Drop-in naming parity with the reference crate's entry points
 # (get_content/get_article, src/lib.rs:140-159): same semantics, input

@@ -19,6 +19,9 @@ from dce_spark.spark.schema import EXTRACTED_SCHEMA
 # Output flush threshold: keep Arrow IPC messages comfortably small.
 _OUT_BUDGET_BYTES = 48 * 1024 * 1024
 _OUT_BUDGET_ROWS = 2048
+# per row: node_count int32 + bytes_in int64; per span: three int32
+_ROW_FIXED_BYTES = 12
+_SPAN_BYTES = 12
 
 _ARROW_SPAN = pa.list_(
     pa.struct(
@@ -46,6 +49,23 @@ _ARROW_OUT = pa.schema(
 )
 
 
+def _utf8_len(s: str | None) -> int:
+    if not s:
+        return 0
+    return len(s) if s.isascii() else len(s.encode("utf-8", errors="replace"))
+
+
+def _row_bytes(url: str, rec: dict) -> int:
+    """Value bytes one output row adds to the pending batch."""
+    n = _ROW_FIXED_BYTES + _SPAN_BYTES * len(rec["content_node_spans"])
+    for s in (url, rec["extracted_text"], rec["article_text"],
+              rec.get("extracted_md"), rec["status"], rec["primary_script"]):
+        n += _utf8_len(s)
+    for link in rec.get("content_links", []):
+        n += _utf8_len(link)
+    return n
+
+
 def extract_batches(
     batches: Iterator[pa.RecordBatch], mode: str = "both"
 ) -> Iterator[pa.RecordBatch]:
@@ -54,6 +74,14 @@ def extract_batches(
     Totally per-row: parse/extraction failures become status codes,
     never exceptions (the reference's error model, src/lib.rs:134-138,
     widened to per-row totality for 10^12-row runs).
+
+    Output is re-chunked, independently of the input batches: a batch
+    is flushed once its rows hold ``_OUT_BUDGET_BYTES`` (48 MiB) of
+    values, i.e. the UTF-8 bytes of every string (url, both texts,
+    markdown, status, script, links) plus the fixed-width numbers, or
+    once it holds ``_OUT_BUDGET_ROWS`` rows. Arrow offsets and validity
+    bitmaps are not counted. A batch therefore exceeds 48 MiB by at
+    most its last row.
     """
     cols = {name: [] for name in _ARROW_OUT.names}
     budget = 0
@@ -77,7 +105,7 @@ def extract_batches(
             if raw is None:
                 nbytes = 0
             elif isinstance(raw, str):  # string column: measure bytes
-                nbytes = len(raw.encode("utf-8", errors="replace"))
+                nbytes = _utf8_len(raw)
             else:
                 nbytes = len(raw)
             rec = extract_page(raw if raw is not None else b"", mode=mode)
@@ -91,7 +119,7 @@ def extract_batches(
             cols["primary_script"].append(rec["primary_script"])
             cols["content_links"].append(rec.get("content_links", []))
             cols["bytes_in"].append(nbytes)
-            budget += nbytes + len(rec["extracted_text"]) + len(rec["article_text"])
+            budget += _row_bytes(url, rec)
             if budget >= _OUT_BUDGET_BYTES or len(cols["url"]) >= _OUT_BUDGET_ROWS:
                 out = flush()
                 if out is not None:
